@@ -80,7 +80,7 @@ def test_query_map_order_leads_with_unverified():
     # the r11-touched and r12-touched rows stay inside the driver's
     # 50-row correctness window
     head50 = order[:50]
-    assert order[0] == "q_langid_nb"
+    assert order[0] == "q_semantic_dedup"
     for name in ("q_quality_classifier", "q_owl_closure",
                  "q_rdf_rdfs_closure", "q_dedup_simhash",
                  "q_dedup_prefix_filter", "q_embedding_near_dup_ann",

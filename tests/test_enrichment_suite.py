@@ -86,6 +86,28 @@ def test_primary_facet_election(spark):
     assert got == {("a", "b"), ("b", "b")}
 
 
+def test_primary_facet_rerun_over_unchanged_store_is_empty(spark):
+    """The enricher's diff against its own graph matches IRI objects, whose
+    datatype and lang are NULL: a second run over the store it already
+    enriched neither re-adds nor removes any election."""
+    quads = make_quads(
+        spark,
+        [
+            iri_q("a", vocab.SAME_AS, "b", "g:ifp"),
+            iri_q("c", vocab.SAME_AS, "d", "g:ifp"),
+            lit_q("b", "p:name", "Bee", "g:doc"),
+        ],
+    )
+    none = quads.filter(F.lit(False))
+    store = StatementStore(quads)
+    first = primary_facet_enricher(store, Diff(quads, none))
+    assert first.added.count() == 4
+    store = store.apply_diff(first)
+    second = primary_facet_enricher(store, Diff(none, none))
+    assert second.added.count() == 0
+    assert second.removed.count() == 0
+
+
 # --- location-event enricher --------------------------------------------------
 
 

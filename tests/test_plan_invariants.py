@@ -339,6 +339,9 @@ SCAN_BUDGET = {
     "q_rdf_rdfs_closure": 14,  # encoding + enricher/final union legs
     "q_rdf_facet_rank": 24,
     "q_primary_facet": 24,
+    # the OWL enricher's null-safe "already stored?" anti-join reads the
+    # pinned base∪schema store, whose build re-counts the encoding
+    "q_owl_closure": 22,
     # brute-force oracle side reads raw vectors per ANN stage comparison
     "q_embedding_near_dup_ann": 12,
     # the same SRP band/verify pipeline (pinned ε-NN edges appear once)

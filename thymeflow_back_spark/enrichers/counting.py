@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..rdf.model import QUAD_COLUMNS, SPO
-from ..rdf.store import Diff, StatementStore, _anti
+from ..rdf.store import Diff, StatementStore, anti_join
 
 # (premises, universe, store) -> quads + n. ``premises`` are the quads whose
 # SPO appeared/disappeared this batch; ``universe`` is the full quad state
@@ -52,14 +52,14 @@ class CountingInferencer:
         qc = list(QUAD_COLUMNS)
         s_after = store.quads
         # reconstruct the pre-batch state: (after ∖ added) ∪ removed
-        s_old = _anti(s_after, diff.added, QUAD_COLUMNS).unionByName(
+        s_old = anti_join(s_after, diff.added, QUAD_COLUMNS).unionByName(
             diff.removed.select(*qc)
         )
         # premise appears: its SPO was not present before the batch
-        new_premises = _anti(diff.added, s_old, SPO)
+        new_premises = anti_join(diff.added, s_old, SPO)
         # premise disappears: its SPO is not present after the batch (a triple
         # merely moving between graphs is neither gone nor new)
-        gone_premises = _anti(diff.removed, s_after, SPO)
+        gone_premises = anti_join(diff.removed, s_after, SPO)
 
         inc = self.derivations(new_premises, s_after, store)
         dec = self.derivations(gone_premises, s_old, store)
@@ -73,7 +73,7 @@ class CountingInferencer:
         )
         new_counts = merged.filter(F.col("n") > 0).localCheckpoint(eager=True)
 
-        added = _anti(new_counts, prev, QUAD_COLUMNS).select(*qc)
-        removed = _anti(prev, new_counts, QUAD_COLUMNS).select(*qc)
+        added = anti_join(new_counts, prev, QUAD_COLUMNS).select(*qc)
+        removed = anti_join(prev, new_counts, QUAD_COLUMNS).select(*qc)
         self.counts = new_counts
         return Diff(added, removed)

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from ..rdf import vocab
 from ..rdf.model import QUAD_COLUMNS
-from ..rdf.store import Diff, StatementStore
+from ..rdf.store import Diff, StatementStore, anti_join
 from .counting import CountingInferencer
 
 IFP_PREDICATES = (vocab.EMAIL, vocab.TELEPHONE, vocab.URL)
@@ -100,8 +100,6 @@ def ifp_enricher(store: StatementStore, diff: Diff) -> Diff:
     """Stateless add-only form (monotone per batch; no retraction state)."""
     added = ifp_derivations(diff.added, store.quads, store).drop("n")
     # only new inferences (not already in the store)
-    added = added.join(
-        store.quads.select(*QUAD_COLUMNS), on=list(QUAD_COLUMNS), how="left_anti"
-    )
+    added = anti_join(added, store.quads, QUAD_COLUMNS)
     removed = store.quads.filter(F.lit(False))
     return Diff(added, removed)

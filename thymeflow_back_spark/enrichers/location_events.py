@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from ..operators.location_events import match_events_to_stays
 from ..rdf import vocab
 from ..rdf.model import QUAD_COLUMNS
-from ..rdf.store import Diff, StatementStore
+from ..rdf.store import Diff, StatementStore, anti_join
 
 OUTPUT_GRAPH = "urn:graph:locationEventEnricher"
 
@@ -102,6 +102,5 @@ def location_event_enricher(store: StatementStore, diff: Diff) -> Diff:
             F.lit(OUTPUT_GRAPH).alias("graph"),
         )
         .select(*QUAD_COLUMNS)
-        .join(store.quads.select(*QUAD_COLUMNS), on=list(QUAD_COLUMNS), how="left_anti")
     )
-    return Diff(added, empty.removed)
+    return Diff(anti_join(added, store.quads, QUAD_COLUMNS), empty.removed)

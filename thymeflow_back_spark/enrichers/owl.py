@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from ..rdf import vocab
 from ..rdf.model import QUAD_COLUMNS
-from ..rdf.store import Diff, StatementStore
+from ..rdf.store import Diff, StatementStore, anti_join
 
 OWL = "http://www.w3.org/2002/07/owl#"
 INVERSE_OF = OWL + "inverseOf"
@@ -209,8 +209,8 @@ def owl_enricher(store: StatementStore, diff: Diff, max_iterations: int = 25) ->
         .withColumn("graph", F.lit(OUTPUT_GRAPH))
         .select(*QUAD_COLUMNS)
         .dropDuplicates(list(QUAD_COLUMNS))
-        # keep only quads genuinely new to the store (derived_all is already
-        # new at the triple level; the graph column narrows it to our graph)
-        .join(store.quads.select(*QUAD_COLUMNS), on=list(QUAD_COLUMNS), how="left_anti")
     )
+    # keep only quads genuinely new to the store (derived_all is already
+    # new at the triple level; the graph column narrows it to our graph)
+    added = anti_join(added, store.quads, QUAD_COLUMNS)
     return Diff(added, store.quads.filter(F.lit(False)))

@@ -15,7 +15,7 @@ from pyspark.sql.window import Window
 from ..operators.closure import connected_components
 from ..rdf import vocab
 from ..rdf.model import QUAD_COLUMNS
-from ..rdf.store import Diff, StatementStore
+from ..rdf.store import Diff, StatementStore, anti_join
 
 OUTPUT_GRAPH = "urn:graph:primaryFacet"
 
@@ -62,6 +62,6 @@ def primary_facet_enricher(store: StatementStore, diff: Diff) -> Diff:
     )
     # replace the enricher graph wholesale: remove stale elections, add fresh
     current = store.graph(OUTPUT_GRAPH)
-    added = edges.join(current, on=list(QUAD_COLUMNS), how="left_anti")
-    removed = current.join(edges, on=list(QUAD_COLUMNS), how="left_anti")
+    added = anti_join(edges, current, QUAD_COLUMNS)
+    removed = anti_join(current, edges, QUAD_COLUMNS)
     return Diff(added, removed)

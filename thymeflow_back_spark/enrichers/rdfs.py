@@ -18,7 +18,7 @@ from ..operators.cachereg import pin
 from ..operators.closure import transitive_closure_local
 from ..rdf import vocab
 from ..rdf.model import QUAD_COLUMNS
-from ..rdf.store import Diff, StatementStore
+from ..rdf.store import Diff, StatementStore, anti_join
 from .counting import CountingInferencer
 
 RDFS = "http://www.w3.org/2000/01/rdf-schema#"
@@ -173,7 +173,5 @@ def rdfs_enricher(store: StatementStore, diff: Diff) -> Diff:
     """Stateless add-only form: materialize RDFS consequences of the diff's
     added statements (monotone per batch; no retraction state)."""
     new_quads = rdfs_derivations(diff.added, store.quads, store).drop("n")
-    new_quads = new_quads.join(
-        store.quads.select(*QUAD_COLUMNS), on=list(QUAD_COLUMNS), how="left_anti"
-    )
+    new_quads = anti_join(new_quads, store.quads, QUAD_COLUMNS)
     return Diff(new_quads, store.quads.filter(F.lit(False)))

@@ -15,10 +15,45 @@ large-star/small-star algorithm (same join primitives, O(log n) rounds).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import threading
+
+from pyspark.rdd import RDD
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .looptune import fixpoint_partitions, scoped_shuffle_partitions
+from ..session import tune
+
+# A fixpoint whose loop state has at most this many rows runs its rounds at
+# one shuffle partition: a round is then tiny-task scheduling, not row work
+# (round 12, sf0.1: star-CC noop 8.19 -> 4.49 s; label propagation over 76k
+# rows and min-label CC over 2.3M rows lost parallelism instead).
+SMALL_STATE_ROWS = 50_000
+_CLONE_LOCK = threading.Lock()
+
+
+def _loop_session(spark: SparkSession, state_rows: int) -> SparkSession:
+    """The session a fixpoint's rounds run in: for a small loop state, a
+    clone of ``spark`` at one shuffle partition (it inherits every runtime
+    conf the caller set and writes none of the caller's, so concurrent
+    queries keep the session sizing); otherwise ``spark`` itself."""
+    if state_rows > SMALL_STATE_ROWS:
+        return spark
+    with _CLONE_LOCK:  # the session constructor re-binds rdd.toDF process-wide
+        to_df = RDD.toDF
+        loop = spark.__class__(spark.sparkContext, spark._jsparkSession.cloneSession())
+        RDD.toDF = to_df
+    return tune(loop, {"spark.sql.shuffle.partitions": "1"})
+
+
+def _rebind(df: DataFrame, spark: SparkSession) -> DataFrame:
+    """``df``'s logical plan as a DataFrame of ``spark`` (moves checkpointed
+    loop state between the caller's session and a loop session)."""
+    if df.sparkSession is spark:
+        return df
+    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        spark._jsparkSession, df._jdf.queryExecution().logical()
+    )
+    return df.__class__(jdf, spark)
 
 
 def connected_components(
@@ -57,70 +92,66 @@ def connected_components(
         # materialize + size measurement is ONE job, not two)
         .localCheckpoint(eager=False)
     )
-    # |sym| sizes every round's exchanges (the join/groupBy volume is
-    # O(|sym|), not O(|labels|)) — round 12, guide §2.2: the loop scopes
-    # its shuffle partitions to the measured state size instead of the
-    # session's core-count default (see operators/looptune.py).
-    sym_n = sym.count()
+    # |sym| picks the loop session: the join/groupBy volume is O(|sym|)
+    spark = edges.sparkSession
+    sym = _rebind(sym, _loop_session(spark, sym.count()))
     labels = (
         sym.select(F.col("a").alias("node"))
         .dropDuplicates()
         .withColumn("component", F.col("node"))
         .localCheckpoint(eager=False)
     )
-    spark = edges.sparkSession
-    with scoped_shuffle_partitions(spark, fixpoint_partitions(sym_n)):
-        sig_prev = _label_signature(labels)  # materializes the checkpoint too
-        converged = False
-        for _ in range(max_iterations):
-            neighbor_min = (
-                sym.join(labels, sym["b"] == labels["node"])
-                .groupBy(F.col("a").alias("node"))
-                .agg(F.min("component").alias("nbr_component"))
+    sig_prev = _label_signature(labels)  # materializes the checkpoint too
+    converged = False
+    for _ in range(max_iterations):
+        neighbor_min = (
+            sym.join(labels, sym["b"] == labels["node"])
+            .groupBy(F.col("a").alias("node"))
+            .agg(F.min("component").alias("nbr_component"))
+        )
+        new_labels = (
+            labels.join(neighbor_min, "node", "left")
+            .select(
+                "node",
+                F.least(
+                    F.col("component"), F.coalesce(F.col("nbr_component"), F.col("component"))
+                ).alias("component"),
             )
-            new_labels = (
-                labels.join(neighbor_min, "node", "left")
-                .select(
-                    "node",
-                    F.least(
-                        F.col("component"), F.coalesce(F.col("nbr_component"), F.col("component"))
-                    ).alias("component"),
-                )
-                .localCheckpoint(eager=False)
+            .localCheckpoint(eager=False)
+        )
+        sig_next = _label_signature(new_labels)  # ONE job: materialize + guard
+        # labels are a set keyed by node with a fixed node set, so equal
+        # cardinality + one-sided difference emptiness = exact equality
+        stable = (
+            sig_next == sig_prev
+            and new_labels.exceptAll(labels).limit(1).count() == 0
+        )
+        labels = new_labels
+        sig_prev = sig_next
+        if stable:
+            converged = True
+            break
+    if not converged:
+        # exit by iteration cap: silently-split components would be a wrong
+        # answer, not a slow one — verify a full propagation round is a no-op
+        neighbor_min = (
+            sym.join(labels, sym["b"] == labels["node"])
+            .groupBy(F.col("a").alias("node"))
+            .agg(F.min("component").alias("nbr_component"))
+        )
+        pending = (
+            labels.join(neighbor_min, "node")
+            .filter(F.col("nbr_component") < F.col("component"))
+            .limit(1)
+            .count()
+        )
+        if pending:
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iterations} "
+                "iterations (component diameter exceeds the cap); raise "
+                "max_iterations or use a large-star/small-star variant"
             )
-            sig_next = _label_signature(new_labels)  # ONE job: materialize + guard
-            # labels are a set keyed by node with a fixed node set, so equal
-            # cardinality + one-sided difference emptiness = exact equality
-            stable = (
-                sig_next == sig_prev
-                and new_labels.exceptAll(labels).limit(1).count() == 0
-            )
-            labels = new_labels
-            sig_prev = sig_next
-            if stable:
-                converged = True
-                break
-        if not converged:
-            # exit by iteration cap: silently-split components would be a wrong
-            # answer, not a slow one — verify a full propagation round is a no-op
-            neighbor_min = (
-                sym.join(labels, sym["b"] == labels["node"])
-                .groupBy(F.col("a").alias("node"))
-                .agg(F.min("component").alias("nbr_component"))
-            )
-            pending = (
-                labels.join(neighbor_min, "node")
-                .filter(F.col("nbr_component") < F.col("component"))
-                .limit(1)
-                .count()
-            )
-            if pending:
-                raise RuntimeError(
-                    f"connected_components did not converge in {max_iterations} "
-                    "iterations (component diameter exceeds the cap); raise "
-                    "max_iterations or use a large-star/small-star variant"
-                )
-    return labels
+    return _rebind(labels, spark)
 
 
 def transitive_closure(
@@ -403,24 +434,19 @@ def connected_components_star(
     if sig_prev[0] == 0:
         return nodes.select("node", F.col("node").alias("component"))
     converged = False
+    # the canonical-edge count picks the loop session for every round
     spark = edges.sparkSession
+    e = _rebind(e, _loop_session(spark, sig_prev[0]))
     for _ in range(max_rounds):
-        # Round 12 (guide §2.2): scope the round's exchanges to the
-        # MEASURED canonical-edge count from the previous signature —
-        # the session default is core-count-sized, which shreds a
-        # few-thousand-row loop state into ~100-row tasks (AQE's
-        # parallelismFirst coalescing keeps them); the size-derived
-        # count is 1 at bench scale and thousands at 100 TB.
-        with scoped_shuffle_partitions(spark, fixpoint_partitions(sig_prev[0])):
-            nxt = _small_star(
-                _large_star(e, input_canonical=True, defer_distinct=True),
-                input_canonical=True,
-            ).localCheckpoint(eager=False)
-            sig_next = _edge_signature(nxt)  # ONE job: materialize + guard
-            # exact set equality = signature match confirmed by ONE one-sided
-            # difference check (both sides distinct, equal cardinality, and
-            # nxt ⊆ e imply equality)
-            stable = sig_next == sig_prev and nxt.exceptAll(e).limit(1).count() == 0
+        nxt = _small_star(
+            _large_star(e, input_canonical=True, defer_distinct=True),
+            input_canonical=True,
+        ).localCheckpoint(eager=False)
+        sig_next = _edge_signature(nxt)  # ONE job: materialize + guard
+        # exact set equality = signature match confirmed by ONE one-sided
+        # difference check (both sides distinct, equal cardinality, and
+        # nxt ⊆ e imply equality)
+        stable = sig_next == sig_prev and nxt.exceptAll(e).limit(1).count() == 0
         e = nxt
         sig_prev = sig_next
         if stable:
@@ -433,6 +459,7 @@ def connected_components_star(
         )
     # fixpoint edge set is a star forest: u -> component center; centers
     # label themselves
+    e = _rebind(e, spark)
     labeled = (
         e.select(F.col("u").alias("node"), F.col("v").alias("component"))
         .unionByName(

@@ -96,14 +96,7 @@ def propagate_labels(
     # at O(frontier) instead of O(all-labeled) join volume per round.
     frontier = labels
     w = Window.partitionBy("id").orderBy(F.desc("c"), F.asc("label"))
-    # Round 12 NOTE: scoping the loop's shuffle partitions to the measured
-    # edge count (the looptune recipe that wins for the CC fixpoints) was
-    # TRIED here and REVERTED on measurement: the vote join + window do
-    # real per-row work over the ~10^5-row edge relation, and collapsing
-    # them to the size-derived 1 task lost more core-level parallelism
-    # than the tiny-task scheduling cost (isolated A/B noop median
-    # 3.12 → 3.79 s at sf0.1). Measurement wins; the session default
-    # stays for this loop.
+    # session partitions, not 1: the ~10^5-row vote join + window is real per-row work
     for r in range(1, rounds + 1):
         votes = (
             edges.join(

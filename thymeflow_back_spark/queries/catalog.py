@@ -52,10 +52,20 @@ def query(name: str, oracle: str | None, bench: bool = False, doc: str = ""):
 # 38 queries touched by round-11 optimizations were last
 # driver-verified BEFORE those changes; their post-change correctness
 # must become driver ground truth before anything else rotates in).
-# Round-12 window: the 29 round-11-touched-but-unverified rows lead,
-# then the round-12-touched bench rows, then the stalest r8-fresh rows
-# alphabetically to fill slot 50; overflow rolls to round 13.
+# Current window: the CC rows below lead, then the round-11-touched but
+# unverified rows, the round-12-touched bench rows, and the stalest
+# r8-fresh rows alphabetically; rows past slot 50 roll to the next round.
 _DRIVER_PRIORITY = [
+    # min-label CC consumers unverified since the round-12 loop
+    # change, then the CC rows whose fixpoint rounds moved to a cloned
+    # loop session:
+    "q_semantic_dedup",
+    "q_agent_name_weights",
+    "q_components_star",
+    "q_semantic_components",
+    "q_primary_facet",
+    "q_rdf_sameas_components",
+    "q_dedup_clusters",
     # touched by round-11 optimization items 6/8/9/11/12/13/14/16/17/18
     # but last driver-verified on the PRE-change code (r10 or earlier):
     "q_langid_nb",
@@ -70,12 +80,9 @@ _DRIVER_PRIORITY = [
     "q_streaming_drift_psi",
     "q_owl_closure",
     "q_rdf_rdfs_closure",
-    "q_rdf_sameas_components",
     "q_rdf_ifp_sameas",
-    "q_primary_facet",
     "q_dedup_simhash",
     "q_dedup_prefix_filter",
-    "q_dedup_clusters",
     "q_embedding_near_dup_ann",
     "q_similarity_pq",
     "q_similarity_pq_rerank",
@@ -91,8 +98,6 @@ _DRIVER_PRIORITY = [
     # sizing, minhash signature sharing, BPE merge batching, remaining
     # Column-tree builders) — their post-change correctness needs
     # driver verification this round:
-    "q_components_star",
-    "q_semantic_components",
     "q_streaming_components",
     "q_label_propagation",
     "q_dedup_minhash_lsh",
@@ -121,7 +126,6 @@ _DRIVER_PRIORITY = [
     "q_salted_join",
     "q_sample_weighted",
     "q_search_ndcg",
-    "q_semantic_dedup",
     "q_spatial_pairs",
     "q_split_leakage_safe",
     "q_streaming_heavy_hitters",

@@ -37,7 +37,7 @@ def _null_safe_cond(a: DataFrame, b: DataFrame, cols) -> F.Column:
     return reduce(lambda x, y: x & y, [a[c].eqNullSafe(b[c]) for c in cols])
 
 
-def _anti(a: DataFrame, b: DataFrame, cols) -> DataFrame:
+def anti_join(a: DataFrame, b: DataFrame, cols) -> DataFrame:
     return a.join(b, on=_null_safe_cond(a, b, cols), how="left_anti")
 
 
@@ -169,8 +169,8 @@ class StatementStore:
         current = self.quads.join(batch_graphs, on="graph", how="left_semi").select(
             *QUAD_COLUMNS
         )
-        added = _anti(new, current, QUAD_COLUMNS)
-        removed = _anti(current, new, QUAD_COLUMNS)
+        added = anti_join(new, current, QUAD_COLUMNS)
+        removed = anti_join(current, new, QUAD_COLUMNS)
 
         # (1) cross-context dedup vs graphs not in this batch (their content
         # is unchanged by the batch, so pre-state == post-state)
@@ -179,7 +179,7 @@ class StatementStore:
             .select(*SPO)
             .dropDuplicates()
         )
-        added = _anti(added, elsewhere, SPO)
+        added = anti_join(added, elsewhere, SPO)
         # (2) dedup vs triples kept unchanged by OTHER batch graphs
         kept = _semi(new, current, QUAD_COLUMNS).select(*SPO, "graph")
         added = added.join(
@@ -192,17 +192,17 @@ class StatementStore:
         winner = added.groupBy(*SPO).agg(F.min("graph").alias("graph"))
         added = _semi(added, winner, (*SPO, "graph"))
         # (4) negation filter: skip adds with an asserted negation
-        added = _anti(
+        added = anti_join(
             added, self.negations(), ["subject", "predicate", "object_value", "object_type"]
         )
 
-        new_quads = _anti(self.quads, removed, QUAD_COLUMNS).unionByName(added)
+        new_quads = anti_join(self.quads, removed, QUAD_COLUMNS).unionByName(added)
         return StatementStore(new_quads), Diff(added, removed)
 
     def apply_diff(self, diff: Diff) -> "StatementStore":
         """Apply an enricher diff: remove then add (idempotent on re-apply)."""
         quads = (
-            _anti(self.quads, diff.removed.select(*QUAD_COLUMNS), QUAD_COLUMNS)
+            anti_join(self.quads, diff.removed.select(*QUAD_COLUMNS), QUAD_COLUMNS)
             .unionByName(diff.added.select(*QUAD_COLUMNS))
             .dropDuplicates(list(QUAD_COLUMNS))
         )

@@ -27,9 +27,9 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
-def tune(spark: SparkSession) -> SparkSession:
+def tune(spark: SparkSession, confs: dict[str, str] = RUNTIME_CONFS) -> SparkSession:
     """Apply runtime-settable confs to an existing session (e.g. the driver's)."""
-    for k, v in RUNTIME_CONFS.items():
+    for k, v in confs.items():
         try:
             spark.conf.set(k, v)
         except Exception:

@@ -7,7 +7,7 @@ stay comparable with bench.py's series. Captures .explain("formatted") to
 plans/<tag>/<query>_<suffix>.txt when --plans TAG[:SUFFIX] is given.
 
 Usage:
-    python tools/profile_query.py [--sf DIR] [--reps N] [--plans r11:before] q_name...
+    python tools/profile_query.py [--sf DIR] [--reps N] [--plans r11:before] [q_name...]
 """
 
 from __future__ import annotations
@@ -32,8 +32,9 @@ def main() -> None:
     ap.add_argument("--plans", default=None, help="TAG[:SUFFIX] -> plans/TAG/<q>_SUFFIX.txt")
     ap.add_argument("--bench-caches", action="store_true",
                     help="enable the bench harness's shingle/PQ/BPE caches")
-    ap.add_argument("names", nargs="+")
+    ap.add_argument("names", nargs="*", help="catalog rows (default: the bench set)")
     args = ap.parse_args()
+    names = args.names or [n for n, q in catalog.QUERIES.items() if q.bench]
 
     spark = get_spark("profile")
     if args.bench_caches:
@@ -56,7 +57,7 @@ def main() -> None:
         plan_dir = os.path.join("plans", tag)
         os.makedirs(plan_dir, exist_ok=True)
 
-    for name in args.names:
+    for name in names:
         q = catalog.QUERIES[name]
         spark.sparkContext.setJobDescription(f"profile:{name}")
         if plan_dir:
