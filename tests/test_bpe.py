@@ -243,7 +243,11 @@ def test_bpe_encode_bytelevel_roundtrip(spark):
 
 
 def test_model_cache_opt_in(spark):
+    """Trained merge lists go through the cross-query memo
+    (cachereg.set_memo): off by default, one training per corpus and
+    parameter set when on."""
     import thymeflow_back_spark.operators.bpe as B
+    from thymeflow_back_spark.operators.cachereg import set_memo
 
     df = spark.createDataFrame([(t,) for t in CORPUS], ["text"])
     want = B.train_bpe_batched(df, "text", 6, batch=2)
@@ -260,7 +264,7 @@ def test_model_cache_opt_in(spark):
         B.train_bpe_batched(df, "text", 6, batch=2)
         B.train_bpe_batched(df, "text", 6, batch=2)
         assert len(calls) == 2
-        B.set_bpe_model_cache(True)
+        set_memo(True)
         got1 = B.train_bpe_batched(df, "text", 6, batch=2)
         got2 = B.train_bpe_batched(df, "text", 6, batch=2)
         assert len(calls) == 3 and got1 == got2 == want
@@ -271,7 +275,7 @@ def test_model_cache_opt_in(spark):
         assert len(calls) == 5
     finally:
         B._train_batched_core = orig
-        B.set_bpe_model_cache(False)
+        set_memo(False)
 
 
 def test_save_load_merges_roundtrip(tmp_path):

@@ -469,11 +469,12 @@ def test_histogram_quantiles_ignore_nulls(spark):
 
 
 def test_shingle_cache_pins_and_matches(spark):
-    """set_shingle_cache(True) memoizes identical shingle plans (one
-    persisted materialization shared by every dedup variant — the bench
-    harness opt-in) without changing any result; disabling unpersists
-    and restores fresh plans."""
+    """With the cross-query memo on (cachereg.set_memo — the bench harness
+    opt-in), identical shingle inputs share one persisted materialization
+    across every dedup variant without changing any result; disabling
+    unpersists and restores fresh plans."""
     from thymeflow_back_spark.operators import dedup as D
+    from thymeflow_back_spark.operators.cachereg import set_memo
 
     docs = spark.createDataFrame(
         [(i, "alpha beta gamma delta " + ("epsilon" if i % 2 else "zeta"))
@@ -486,7 +487,7 @@ def test_shingle_cache_pins_and_matches(spark):
     }
     assert base
     try:
-        D.set_shingle_cache(True)
+        set_memo(True)
         a = D.doc_shingles(docs, "doc_id", "text", 3)
         b = D.doc_shingles(docs, "doc_id", "text", 3)
         assert a is b and a.storageLevel.useMemory
@@ -498,7 +499,7 @@ def test_shingle_cache_pins_and_matches(spark):
         lsh = D.minhash_near_dups(docs, "doc_id", "text", 3, 0.5)
         assert {(r.a_id, r.b_id) for r in lsh.collect()} == set(base)
     finally:
-        D.set_shingle_cache(False)
+        set_memo(False)
     fresh = D.doc_shingles(docs, "doc_id", "text", 3)
     assert fresh is not a and not fresh.storageLevel.useMemory
     assert not a.storageLevel.useMemory  # disabled -> unpersisted

@@ -135,3 +135,46 @@ def test_jl_projection_matches_numpy_reference(spark):
     # the matrix is content-addressed: stable across calls and salts differ
     assert jl_sign_matrix("jl", d_in, d_out) == signs
     assert jl_sign_matrix("other", d_in, d_out) != signs
+
+
+def test_pq_memo_trains_once_and_keeps_code_table(spark, monkeypatch):
+    """With the cross-query memo on, two ADC runs over one corpus train the
+    codebooks once and encode once — the code table survives the
+    per-query release_pinned() — and answer exactly as a memo-off run.
+    Off, the code table is a per-query pin that release_pinned() frees."""
+    import thymeflow_back_spark.operators.pq as P
+    from thymeflow_back_spark.operators.cachereg import (
+        memo_stats,
+        pinned_count,
+        release_pinned,
+        set_memo,
+    )
+
+    emb = load(spark, SF, "embeddings").filter(F.col("vec_id") < 80)
+    queries = emb.filter(F.col("vec_id") < 3)
+
+    def run():
+        books = pq_codebooks(emb, "vec_id", "embedding", M, K, 1)
+        rows = pq_adc_topk(emb, queries, "vec_id", "embedding", books, 4).collect()
+        return {(r.q_id, r.rank): (r.vec_id, r.adc_dist) for r in rows}
+
+    release_pinned()
+    want = run()
+    assert pinned_count() == 1  # memo off: the code table is pinned ...
+    assert release_pinned() == 1  # ... and freed with the query
+    encodes = []
+    real_encode = P.pq_encode
+    monkeypatch.setattr(
+        P, "pq_encode", lambda *a: encodes.append(1) or real_encode(*a)
+    )
+    try:
+        set_memo(True)
+        assert run() == want
+        release_pinned()
+        assert run() == want
+        assert pinned_count() == 0
+        assert memo_stats() == {"pq_books": (1, 1), "pq_codes": (1, 1)}
+        assert len(encodes) == 1
+    finally:
+        set_memo(False)
+        release_pinned()

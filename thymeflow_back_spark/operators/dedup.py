@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .cachereg import pin
+from .cachereg import memo, pin
 
 # 31-bit Mersenne prime: a·h + b stays < 2^62, no signed-64 overflow.
 MERSENNE_P = 2147483647
@@ -90,51 +90,22 @@ def shingle_array_sql(text_col: str, n: int) -> str:
     )
 
 
-_SHINGLE_CACHE: dict[int, DataFrame] | None = None
-
-
-def set_shingle_cache(enabled: bool) -> None:
-    """Opt-in pinning of the tokenize/shingle stage across queries.
-
-    A harness that runs several dedup variants over the SAME corpus
-    (bench.py runs the n-gram join and MinHash+LSH back to back)
-    otherwise recomputes an identical CPU-heavy shingle stage per query.
-    When enabled, ``doc_shingles`` memoizes its result by plan
-    semanticHash and persists it, so every variant reads the one
-    materialization. OFF by default — whether corpus-sized state is
-    worth pinning is a per-run capacity decision, so a 100 TB pipeline
-    must opt in explicitly. Disabling unpersists everything cached."""
-    global _SHINGLE_CACHE
-    if enabled:
-        if _SHINGLE_CACHE is None:
-            _SHINGLE_CACHE = {}
-    elif _SHINGLE_CACHE is not None:
-        for cached in _SHINGLE_CACHE.values():
-            cached.unpersist()
-        _SHINGLE_CACHE = None
-
-
 def doc_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
     """One row per document with its distinct shingle set: (id, sh array).
 
     Tokenization is the CPU-heavy stage of every dedup variant, so the
     input is spread across the session's cores first (no-op when the scan
     already has enough partitions — operators/skew.spread_small_input).
-    With the opt-in cache (``set_shingle_cache``), identical shingle
-    plans are persisted once and shared across queries."""
+    With the opt-in memo (operators/cachereg.set_memo), a corpus's
+    shingles are persisted once and shared across queries."""
     from .skew import spread_small_input
 
-    out = spread_small_input(df).selectExpr(
-        id_col, f"{shingle_array_sql(text_col, n)} as sh"
+    return memo(
+        "shingles", df, (id_col, text_col, n),
+        lambda: spread_small_input(df).selectExpr(
+            id_col, f"{shingle_array_sql(text_col, n)} as sh"
+        ),
     )
-    if _SHINGLE_CACHE is not None:
-        key = out.semanticHash()
-        cached = _SHINGLE_CACHE.get(key)
-        if cached is not None:
-            return cached
-        out = out.persist()
-        _SHINGLE_CACHE[key] = out
-    return out
 
 
 def word_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:

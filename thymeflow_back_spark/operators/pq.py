@@ -36,44 +36,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .cachereg import pin
+from .cachereg import memo, pin
 from .ivf import seed_centroids
 from .similarity import SCORE_DECIMALS, as_double_array
 
 PQ_M = 8  # subspaces
 PQ_K = 16  # codes per subspace
-
-# Opt-in cross-query index cache (the set_shingle_cache pattern): a PQ
-# index is a BUILD-ONCE artifact — at scale it's materialized like
-# ivf_write_index's parquet — so a harness running several PQ queries
-# over the same corpus should not re-train codebooks / re-encode per
-# query. Keyed by plan semanticHash + parameters; OFF by default (pinning
-# corpus-sized code tables is a per-run capacity decision).
-_PQ_CACHE: dict | None = None
-
-
-def set_pq_cache(enabled: bool) -> None:
-    """Opt-in memoization of trained codebooks and the persisted code
-    table across queries (see comment above). Disabling unpersists any
-    cached code tables."""
-    global _PQ_CACHE
-    if enabled:
-        if _PQ_CACHE is None:
-            _PQ_CACHE = {}
-    elif _PQ_CACHE is not None:
-        for v in _PQ_CACHE.values():
-            if isinstance(v, DataFrame):
-                v.unpersist()
-        _PQ_CACHE = None
-
-
-def _plan_key(df: DataFrame) -> tuple:
-    """Cache key for a corpus plan: semanticHash is a 32-bit plan hash, so
-    two different corpora in one session could collide and silently serve
-    the wrong codebooks/codes — ride the schema string along as a cheap
-    disambiguator (collisions now also need identical schemas)."""
-    return (df.semanticHash(), str(df.schema))
-
 
 def _sub(vec: Column, j: int, sub_d: int) -> Column:
     return F.slice(vec, j * sub_d + 1, sub_d)
@@ -261,12 +229,15 @@ def pq_codebooks(
     subvector) assignments through an inline explode, and a single
     (j, code)-keyed aggregate produces all m·k means (m·k rows × sub_d
     sum columns after map-side combine) — not m separate corpus scans."""
-    ck = None
-    if _PQ_CACHE is not None:
-        ck = ("books", _plan_key(corpus), id_col, vec_col, m, k, iterations)
-        cached = _PQ_CACHE.get(ck)
-        if cached is not None:
-            return cached
+    return memo(
+        "pq_books", corpus, (id_col, vec_col, m, k, iterations),
+        lambda: _train_codebooks(corpus, id_col, vec_col, m, k, iterations),
+    )
+
+
+def _train_codebooks(
+    corpus: DataFrame, id_col: str, vec_col: str, m: int, k: int, iterations: int
+) -> list[list[list[float]]]:
     seeds = seed_centroids(corpus, id_col, vec_col, k)
     d = len(seeds[0])
     if d % m:
@@ -300,8 +271,6 @@ def pq_codebooks(
         for r in sums:
             nxt[r["j"]][r["code"]] = [r[f"s{i}"] / r["n"] for i in range(sub_d)]
         books = nxt
-    if ck is not None:
-        _PQ_CACHE[ck] = books
     return books
 
 
@@ -310,22 +279,15 @@ def _code_table(
 ) -> DataFrame:
     """The materialized (id, code0..code{m-1}) table pq_adc_topk probes.
 
-    Materialization is load-bearing either way (see the comment at the
-    call site); with the opt-in cache it is ALSO memoized across queries
-    — persisted instead of query-scope pinned, keyed by the corpus plan
-    and the codebook values."""
-    if _PQ_CACHE is not None:
-        ck = (
-            "codes", _plan_key(corpus), id_col, vec_col,
-            tuple(tuple(tuple(c) for c in book) for book in books),
-        )
-        cached = _PQ_CACHE.get(ck)
-        if cached is not None:
-            return cached
-        out = pq_encode(corpus, id_col, vec_col, books).persist()
-        _PQ_CACHE[ck] = out
-        return out
-    return pin(pq_encode(corpus, id_col, vec_col, books))
+    Materialization is load-bearing (see the comment at the call site):
+    query-scope pinned, or — with the opt-in memo — persisted across
+    queries, keyed by the corpus plan and the codebook values."""
+    codes = memo(
+        "pq_codes", corpus,
+        (id_col, vec_col, tuple(tuple(tuple(c) for c in book) for book in books)),
+        lambda: pq_encode(corpus, id_col, vec_col, books),
+    )
+    return codes if codes.is_cached else pin(codes)
 
 
 def pq_encode(

@@ -52,9 +52,10 @@ def query(name: str, oracle: str | None, bench: bool = False, doc: str = ""):
 # 38 queries touched by round-11 optimizations were last
 # driver-verified BEFORE those changes; their post-change correctness
 # must become driver ground truth before anything else rotates in).
-# Current window: the CC rows below lead, then the round-11-touched but
-# unverified rows, the round-12-touched bench rows, and the stalest
-# r8-fresh rows alphabetically; rows past slot 50 roll to the next round.
+# Current window: the CC rows below lead, then the memo-site rows, the
+# round-11-touched but unverified rows, the round-12-touched bench rows,
+# and the stalest r8-fresh rows alphabetically; rows past slot 50 roll to
+# the next round.
 _DRIVER_PRIORITY = [
     # min-label CC consumers unverified since the round-12 loop
     # change, then the CC rows whose fixpoint rounds moved to a cloned
@@ -66,6 +67,17 @@ _DRIVER_PRIORITY = [
     "q_primary_facet",
     "q_rdf_sameas_components",
     "q_dedup_clusters",
+    # rows whose shingle / PQ / BPE artifact moved behind the one
+    # cross-query memo (operators/cachereg.memo):
+    "q_dedup_ngram_jaccard",
+    "q_dedup_minhash_lsh",
+    "q_contamination_lsh",
+    "q_similarity_pq",
+    "q_similarity_pq_rerank",
+    "q_similarity_ivfpq",
+    "q_bpe_train",
+    "q_bpe_encode",
+    "q_bpe_bytelevel",
     # touched by round-11 optimization items 6/8/9/11/12/13/14/16/17/18
     # but last driver-verified on the PRE-change code (r10 or earlier):
     "q_langid_nb",
@@ -84,15 +96,11 @@ _DRIVER_PRIORITY = [
     "q_dedup_simhash",
     "q_dedup_prefix_filter",
     "q_embedding_near_dup_ann",
-    "q_similarity_pq",
-    "q_similarity_pq_rerank",
     "q_similarity_ivf",
-    "q_similarity_ivfpq",
     "q_similarity_jl",
     "q_similarity_jl_rerank",
     "q_kcenter_sample",
     "q_cluster_quota",
-    "q_bpe_train",
     "q_streaming_ivf_upsert",
     # queries whose operators round 12 touches (fixpoint partition
     # sizing, minhash signature sharing, BPE merge batching, remaining
@@ -100,10 +108,7 @@ _DRIVER_PRIORITY = [
     # driver verification this round:
     "q_streaming_components",
     "q_label_propagation",
-    "q_dedup_minhash_lsh",
-    "q_contamination_lsh",
     "q_lsh_param_select",
-    "q_bpe_encode",
     "q_similarity_sq8",
     "q_pagerank",
     "q_kmeans_clusters",

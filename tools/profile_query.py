@@ -21,7 +21,7 @@ import time
 sys.path.insert(0, ".")
 
 from thymeflow_back_spark.queries import catalog  # noqa: E402
-from thymeflow_back_spark.operators.cachereg import release_pinned  # noqa: E402
+from thymeflow_back_spark.operators.cachereg import release_pinned, set_memo  # noqa: E402
 from thymeflow_back_spark.session import get_spark  # noqa: E402
 
 
@@ -31,20 +31,14 @@ def main() -> None:
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("--plans", default=None, help="TAG[:SUFFIX] -> plans/TAG/<q>_SUFFIX.txt")
     ap.add_argument("--bench-caches", action="store_true",
-                    help="enable the bench harness's shingle/PQ/BPE caches")
+                    help="enable the bench harness's cross-query memo (operators/cachereg)")
     ap.add_argument("names", nargs="*", help="catalog rows (default: the bench set)")
     args = ap.parse_args()
     names = args.names or [n for n, q in catalog.QUERIES.items() if q.bench]
 
     spark = get_spark("profile")
     if args.bench_caches:
-        from thymeflow_back_spark.operators.bpe import set_bpe_model_cache
-        from thymeflow_back_spark.operators.dedup import set_shingle_cache
-        from thymeflow_back_spark.operators.pq import set_pq_cache
-
-        set_shingle_cache(True)
-        set_pq_cache(True)
-        set_bpe_model_cache(True)
+        set_memo(True)
 
     # same session warmers as bench.py (JVM, parquet footers, Arrow pool)
     next(iter(catalog.QUERIES.values())).spark(spark, args.sf).count()
